@@ -43,75 +43,16 @@ def entry(spark: SparkSession) -> DataFrame:
 # overflow rolls to the next round's window (the marker-delimited queue
 # section below is regenerated from the tool each round and CI-locked).
 _SWEEP_PRIORITY = [
-    # ---- round-12 window (driver budget: first 50) ------------------
+    # ---- round-13 window (sweep budget: first 50) -------------------
     # Rotation per the armed tripwire (test_sweep_head_not_already_
-    # stamped went red when CORRECTNESS_r11.json landed, as designed):
-    # promote the staged r12 queue head — the mechanically stalest
-    # driver rows after the r11 stamp (the remaining r4/r5 tranche
-    # leads), zero overlap with the r10/r11 windows — and demote the 50
-    # r11-stamped names to the tail. Locked by tests/
-    # test_round10_hardening.py::test_r12_window_is_the_stalest_50_as_
-    # of_r11 (content+position) and ::test_sweep_head_not_already_
-    # stamped (head(50) must never appear in the two most recent
-    # committed CORRECTNESS files).
-
-    "k_core_peel_rounds",
-    "langid_confusion_metrics",
-    "max_concurrent_shipments",
-    "pca_power_iteration",
-    "permutation_test_mean_diff",
-    "poisson_bootstrap_ci",
-    "range_join_binned_incidents",
-    "repeated_passage_coverage",
-    "sparse_dot_topk_pairs",
-    "token_budget_selection",
-    "value_histogram_equidepth",
-    "weighted_sample_docs",
-    "acf_lag_profile",
-    "basket_lift_pairs",
-    "benford_first_digit_audit",
-    "cumulative_unique_users_by_day",
-    "cusum_changepoint",
-    "dataset_datasheet",
-    "dedup_edit_distance_pairs",
-    "dedup_keep_best_quality",
-    "dup_cluster_size_histogram",
-    "ewma_user_value",
-    "first_touch_attribution",
-    "interarrival_gap_stats",
-    "k_anonymity_audit",
-    "kaplan_meier_table",
-    "ks_two_sample",
-    "lorenz_curve_deciles",
-    "mann_kendall_trend",
-    "mann_whitney_u",
-    "median_imputation_audit",
-    "multimodal_jpeg_decode",
-    "multimodal_png_decode",
-    "multimodal_png_resize",
-    "multimodal_wav_decode",
-    "neyman_allocation_sample",
-    "revenue_gini",
-    "seasonal_residual_anomaly",
-    "similarity_recall_at_k",
-    "spearman_rank_correlation",
-    "theil_sen_slope",
-    "top5_latest",
-    "top_event_paths",
-    "winsorized_price_stats",
-    "wire_sink_roundtrip",
-    "asof_last_login_value",
-    "boilerplate_chunk_removal",
-    "bpe_train_merges",
-    "daily_volume_anomaly",
-    "dedup_cluster_components",
-
-    # ---- round-13 queue (regenerated by tools/evidence_age.py) ------
-    # Mechanical stalest-first ordering: compute(assume_round=12) with
-    # the r12 window above assumed verified, window names excluded.
-    # tests/test_round7_hardening.py::test_r13_queue_is_the_evidence_
-    # tool_output asserts this section matches the tool EXACTLY and
-    # that the recorded fingerprint baseline still matches the code.
+    # stamped went red when CORRECTNESS_r12.json landed, as designed):
+    # promote the staged round-13 queue head — the 50 stalest verified
+    # rows after the r12 stamp (the last r7 tranche leads), zero overlap
+    # with the r11/r12 windows — and demote the 50 r12-stamped names to
+    # the tail. Locked by tests/test_round10_hardening.py::test_r13_
+    # window_is_the_stalest_50_as_of_r12 (content+position) and
+    # ::test_sweep_head_not_already_stamped (head(50) must never appear
+    # in the two most recent committed CORRECTNESS files).
 
     "dedup_exact_text",
     "dedup_keep_canonical",
@@ -163,6 +104,14 @@ _SWEEP_PRIORITY = [
     "customer_balance_quartiles",
     "customers_with_orders",
     "customers_without_orders",
+
+    # ---- round-13 queue (regenerated by tools/evidence_age.py) ------
+    # Mechanical stalest-first ordering of everything behind the
+    # round-13 window: the queue of compute(assume_round=12), window names
+    # excluded. tests/test_round7_hardening.py::test_r13_queue_is_the_
+    # evidence_tool_output asserts this section matches the tool EXACTLY
+    # and that the recorded fingerprint baseline still matches the code.
+
     "embedding_near_dup_pairs",
     "etl_enrich_events",
     "event_type_rollup",
@@ -307,6 +256,56 @@ _SWEEP_PRIORITY = [
     "vocab_richness_by_source",
     "zipf_token_rank",
     "zorder_locality_buckets",
+    "acf_lag_profile",
+    "asof_last_login_value",
+    "basket_lift_pairs",
+    "benford_first_digit_audit",
+    "boilerplate_chunk_removal",
+    "bpe_train_merges",
+    "cumulative_unique_users_by_day",
+    "cusum_changepoint",
+    "daily_volume_anomaly",
+    "dataset_datasheet",
+    "dedup_cluster_components",
+    "dedup_edit_distance_pairs",
+    "dedup_keep_best_quality",
+    "dup_cluster_size_histogram",
+    "ewma_user_value",
+    "first_touch_attribution",
+    "interarrival_gap_stats",
+    "k_anonymity_audit",
+    "k_core_peel_rounds",
+    "kaplan_meier_table",
+    "ks_two_sample",
+    "langid_confusion_metrics",
+    "lorenz_curve_deciles",
+    "mann_kendall_trend",
+    "mann_whitney_u",
+    "max_concurrent_shipments",
+    "median_imputation_audit",
+    "multimodal_jpeg_decode",
+    "multimodal_png_decode",
+    "multimodal_png_resize",
+    "multimodal_wav_decode",
+    "neyman_allocation_sample",
+    "pca_power_iteration",
+    "permutation_test_mean_diff",
+    "poisson_bootstrap_ci",
+    "range_join_binned_incidents",
+    "repeated_passage_coverage",
+    "revenue_gini",
+    "seasonal_residual_anomaly",
+    "similarity_recall_at_k",
+    "sparse_dot_topk_pairs",
+    "spearman_rank_correlation",
+    "theil_sen_slope",
+    "token_budget_selection",
+    "top5_latest",
+    "top_event_paths",
+    "value_histogram_equidepth",
+    "weighted_sample_docs",
+    "winsorized_price_stats",
+    "wire_sink_roundtrip",
     # ---- end round-13 queue ----
 ]
 

@@ -4,9 +4,9 @@ Reference: the ``ParsePubSubMessage`` DoFn (Streamingdag.py:159-236) — a
 per-record parse/validate/coerce/enrich/filter. Here each step is a pure
 DataFrame->DataFrame function built from Column expressions, so:
 
-- Catalyst folds the whole chain into one whole-stage-codegen'd project +
-  filter over the scan (no Python on the hot path, ~10-100x the DoFn's
-  row-at-a-time throughput);
+- no Python on the hot path: one ``from_json`` parse (see
+  :func:`parse_wire`; interpreted, not codegen'd, and the dominant
+  per-row cost) under one filter + project stage;
 - the SAME functions apply to ``spark.read`` and ``spark.readStream``
   (batch/streaming symmetry, SURVEY.md §7);
 - filters composed here are pushed down to the parquet scan by Catalyst.
@@ -51,10 +51,14 @@ def parse_wire(df: DataFrame, value_col: str = "value") -> DataFrame:
     malformed JSON -> NULL struct (dropped by :func:`validate_required`),
     unknown keys dropped (`ignoreUnknownValues`), absent keys -> NULL
     (Streamingdag.py:166-172, 187-203, 318-321).
+
+    Expanded through ``inline(array(...))``, not ``select("e.*")``:
+    Catalyst pushes :func:`validate_required`'s filter below a projection
+    and copies ``from_json`` into each conjunct (six whole-line parses
+    per row), but never below a ``Generate``, so each line is parsed once.
     """
     payload = F.col(value_col).cast("string")
-    parsed = F.from_json(payload, WIRE_JSON_SCHEMA).alias("e")
-    return df.select(parsed).select("e.*")
+    return df.select(F.inline(F.array(F.from_json(payload, WIRE_JSON_SCHEMA))))
 
 
 def validate_required(df: DataFrame) -> DataFrame:
@@ -76,20 +80,15 @@ def coerce_types(df: DataFrame, as_of: str | None = None) -> DataFrame:
     (Streamingdag.py:183-195). The wire `timestamp` string is also parsed to
     a real TIMESTAMP_NTZ (lenient: unparseable -> NULL, caught by E2's
     hour fallback)."""
-    return (
-        df.withColumn("processed_at", _processed_at(as_of))
-        .withColumn("id", F.col("id").cast("string"))
-        .withColumn("user_id", F.col("user_id").cast("string"))
-        .withColumn("event_type", F.col("event_type").cast("string"))
-        .withColumn("message", F.col("message").cast("string"))
-        .withColumn("value", F.coalesce(F.col("value").cast("double"), F.lit(0.0)))
-        .withColumn("event_time_str", F.col("timestamp").cast("string"))
-        .withColumn(
-            "timestamp",
-            F.try_to_timestamp(
-                F.regexp_replace(F.col("timestamp").cast("string"), "Z$", "+00:00")
-            ).cast("timestamp_ntz"),
-        )
+    ts_str = F.col("timestamp").cast("string")
+    return df.withColumns(
+        {
+            "processed_at": _processed_at(as_of),
+            **{c: F.col(c).cast("string") for c in ("id", "user_id", "event_type", "message")},
+            "value": F.coalesce(F.col("value").cast("double"), F.lit(0.0)),
+            "event_time_str": ts_str,
+            "timestamp": F.try_to_timestamp(F.regexp_replace(ts_str, "Z$", "+00:00")).cast("timestamp_ntz"),
+        }
     )
 
 
@@ -98,12 +97,11 @@ def enrich(df: DataFrame) -> DataFrame:
     (Streamingdag.py:206-225). Expects the post-coercion column set; the
     lenient hour parse runs over the original wire string so the
     parse-failure->0 fallback is preserved."""
-    return (
-        df.withColumn("message_length", message_length(F.col("message")))
-        .withColumn("event_hour", event_hour_lenient(F.col("event_time_str")))
-        .withColumn(
-            "data_quality_score",
-            data_quality_score(
+    return df.withColumns(
+        {
+            "message_length": message_length(F.col("message")),
+            "event_hour": event_hour_lenient(F.col("event_time_str")),
+            "data_quality_score": data_quality_score(
                 F.col("user_id"),
                 F.col("message"),
                 F.col("value"),
@@ -111,7 +109,7 @@ def enrich(df: DataFrame) -> DataFrame:
                 # parse success (Streamingdag.py:222)
                 truthy_str(F.col("event_time_str")),
             ),
-        )
+        }
     )
 
 
@@ -169,29 +167,24 @@ def enrich_raw_events(df: DataFrame, as_of: str | None = None) -> DataFrame:
     mostly survive the >=50 gate). If that invariant ever changes, add
     the same null-drop to BOTH this chain and the ENRICHED_CTE oracle.
     """
-    e = (
-        df.withColumn("id", F.col("event_id").cast("string"))
-        .withColumn("timestamp", F.col("ts"))
-        .withColumn("message", F.col("props"))
-        .withColumn("user_id", F.col("user_id").cast("string"))
-        .withColumn("value", F.coalesce(F.col("value").cast("double"), F.lit(0.0)))
-        .withColumn("processed_at", _processed_at(as_of))
-        .withColumn("opt", F.from_json(F.col("props"), _OPTIONAL_JSON_SCHEMA))
-    )
-    for f in OPTIONAL_FIELDS:
-        e = e.withColumn(f, F.col("opt").getField(f))
-    e = (
-        e.withColumn("message_length", message_length(F.col("message")))
-        .withColumn("event_hour", F.coalesce(F.hour("timestamp"), F.lit(0)).cast("long"))
-        .withColumn(
-            "data_quality_score",
-            data_quality_score(
-                F.col("user_id"),
-                F.col("message"),
-                F.col("value"),
-                F.col("timestamp").isNotNull(),
+    user_id = F.col("user_id").cast("string")
+    value = F.coalesce(F.col("value").cast("double"), F.lit(0.0))
+    e = df.withColumns(
+        {
+            "id": F.col("event_id").cast("string"),
+            "timestamp": F.col("ts"),
+            "message": F.col("props"),
+            "user_id": user_id,
+            "value": value,
+            "processed_at": _processed_at(as_of),
+            "opt": F.from_json(F.col("props"), _OPTIONAL_JSON_SCHEMA),
+            "message_length": message_length(F.col("props")),
+            "event_hour": F.coalesce(F.hour("ts"), F.lit(0)).cast("long"),
+            "data_quality_score": data_quality_score(
+                user_id, F.col("props"), value, F.col("ts").isNotNull()
             ),
-        )
+        }
     )
-    e = quality_filter(e)
+    # one parse of props; the optional fields are read out of its struct
+    e = quality_filter(e.select("*", "opt.*"))
     return e.select(*ENRICHED_COLUMNS)

@@ -25,6 +25,9 @@ RUNTIME_CONFS = {
     # Python DataSource filter pushdown (sources/pysource.py implements
     # pushFilters; Spark requires the opt-in flag).
     "spark.sql.python.filterPushdown.enabled": "true",
+    # Past this many paths (default 32) file listing runs as a Spark job:
+    # ~220 ms of each 40-file drain on 4 cores, vs ~10 ms on the driver.
+    "spark.sql.sources.parallelPartitionDiscovery.threshold": "1024",
 }
 
 

@@ -336,16 +336,16 @@ def test_sweep_head_not_already_stamped():
         )
 
 
-def test_r12_window_is_the_stalest_50_as_of_r11():
+def test_r13_window_is_the_stalest_50_as_of_r12():
     """Content + position lock for THIS round's window: the head 50
     must be exactly the 50 stalest driver rows by (evidence_round,
-    name) over the committed CORRECTNESS_r01..r11 evidence — pinned to
-    rounds <= 11 so the assertion stays stable after the driver lands
-    CORRECTNESS_r12 (the dynamic freshness check is
+    name) over the committed CORRECTNESS_r01..r12 evidence — pinned to
+    rounds <= 12 so the assertion stays stable after
+    CORRECTNESS_r13.json lands (the dynamic freshness check is
     test_sweep_head_not_already_stamped above). Also asserts the
-    rotation's outcome: zero pre-r7 rows survive outside the window
-    (the r11 rotation retired r4; this one retires r5/r6 and most of
-    r7)."""
+    rotation's outcome: zero r7 rows survive outside the window (the
+    r12 rotation retired r5/r6 and most of r7; this one retires the
+    rest of r7)."""
     import json
 
     import __spark_entry__ as entry
@@ -353,7 +353,7 @@ def test_r12_window_is_the_stalest_50_as_of_r11():
     ev: dict[str, int] = {}
     for path in _correctness_files():
         rnd = int(path.rsplit("_r", 1)[1].split(".")[0])
-        if rnd > 11:
+        if rnd > 12:
             continue
         for name, row in json.load(open(path)).items():
             ok = bool(row.get("hash_match") or row.get("rows_match")) and not row.get("err")
@@ -364,9 +364,9 @@ def test_r12_window_is_the_stalest_50_as_of_r11():
     expected = sorted(names, key=lambda q: (ev[q], q))[:50]
     head = names[:50]
     assert head == expected, (head[:5], expected[:5])
-    # every pre-r7 row is already retired; the tail floor is r7
-    assert all(ev[q] >= 7 for q in names[50:]), [
-        q for q in names[50:] if ev[q] < 7
+    # every r7 row is now retired; the tail floor is r9
+    assert all(ev[q] >= 9 for q in names[50:]), [
+        q for q in names[50:] if ev[q] < 9
     ][:5]
 
 

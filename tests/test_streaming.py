@@ -482,3 +482,32 @@ def test_kafka_shaped_stream_matches_drop_dir_path(spark, tmpdirs):
     sb = got_b.sort_values("id").reset_index(drop=True)
     assert len(sa) == len(sb) == 30  # malformed + invalid dropped on BOTH paths
     assert sa.equals(sb)
+
+
+def test_forty_file_batch_lists_without_a_spark_job(spark, tmp_path):
+    """A 40-file drain resolves its file index on the driver: above
+    parallelPartitionDiscovery.threshold (default 32) Spark lists the
+    paths in a distributed job, ~220 ms of every backlog drain."""
+    from streaming_data_pipeline_spark.session import apply_runtime_confs
+
+    paths = []
+    for i in range(40):
+        p = tmp_path / f"part-{i:02d}.json"
+        p.write_text(json.dumps(EVENTS[i % len(EVENTS)]) + "\n")
+        paths.append(str(p))
+    apply_runtime_confs(spark)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    try:
+        sc.setJobGroup("listing-40", "resolve a 40-file text source")
+        spark.read.text(paths)
+        # job events reach the tracker in order: once this later job is
+        # visible, any listing job would be too
+        sc.setJobGroup("listing-40-sentinel", "sentinel")
+        spark.range(1).collect()
+        [sentinel] = tracker.getJobIdsForGroup("listing-40-sentinel")
+        assert tracker.getJobInfo(sentinel) is not None
+        assert tracker.getJobIdsForGroup("listing-40") == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)

@@ -114,11 +114,9 @@ def test_quality_filter_threshold(spark):
 
 
 def test_parse_wire_handles_binary_payload(spark):
-    df = spark.createDataFrame(
-        [Row(value=bytearray(json.dumps(GOOD).encode("utf-8")))]
-    )
-    out = wire_pipeline(df, as_of=AS_OF).collect()
-    assert len(out) == 1  # T1: bytes -> string decode via cast
+    # T1: bytes -> string decode via cast; every edge case as in text
+    df = spark.createDataFrame([Row(value=bytearray(v.encode("utf-8"))) for v in EDGE_LINES])
+    assert _edge_rows(wire_pipeline(df, as_of=AS_OF).collect()) == EDGE_KEPT
 
 
 def test_sample_events_scoring(spark):
@@ -132,3 +130,96 @@ def test_sample_events_scoring(spark):
     out = run(spark, events)
     assert len(out) == 5
     assert {r.data_quality_score for r in out} == {100}
+
+
+# --------------------------------------------------------------------------
+# Parse-once plan shape and parse edge cases
+# --------------------------------------------------------------------------
+
+# One line per parse edge case, plus rows that pass validation but score
+# low, so the pre-filter observe metrics see every outcome.
+EDGE_LINES = [
+    json.dumps(GOOD),
+    "{not json",  # malformed
+    "null",  # a literal JSON null
+    "",  # an empty line
+    "[" + json.dumps(dict(GOOD, id="arr")) + "]",  # top-level array
+    json.dumps(dict(GOOD, id="jnull", user_id=None)),  # required key = null
+    json.dumps(dict(GOOD, id="jnull_msg", message=None)),
+    json.dumps(dict(GOOD, id="low", user_id="unknown", value=-1.0, message="")),
+    json.dumps(dict(GOOD, id="mid", user_id="unknown", value=-1.0)),
+    json.dumps(dict(GOOD, id="noval", value=None)),
+    json.dumps(dict(GOOD, id="numid", user_id=123)),
+    json.dumps(dict(GOOD, id="badts", timestamp="nope")),
+]
+
+# (id, user_id, value, data_quality_score, message_length, event_hour) of
+# every kept row, recorded from the chain before parse_wire went through
+# inline(): the rejects above (malformed, null, empty, array, explicit
+# null required key, score 25) are absent.
+EDGE_KEPT = [
+    ("badts", "dag_user", 1.0, 100, 21, 0),
+    ("mid", "unknown", -1.0, 50, 21, 10),
+    ("noval", "dag_user", 0.0, 75, 21, 10),
+    ("numid", "123", 1.0, 100, 21, 10),
+    ("test-dag-001", "dag_user", 1.0, 100, 21, 10),
+]
+EDGE_OBSERVED = {"rows": 6, "avg_quality": 75.0, "low_quality_rows": 1}
+
+
+def _edge_rows(rows):
+    return sorted(
+        (r.id, r.user_id, r.value, r.data_quality_score, r.message_length, r.event_hour)
+        for r in rows
+    )
+
+
+def test_wire_pipeline_parses_each_payload_once(spark):
+    """validate_required's filter must read the parsed columns, not a
+    copy of from_json per conjunct (the select("e.*") chain planned 14)."""
+    out = wire_pipeline(wire_df(spark, [GOOD]), as_of=AS_OF)
+    assert out._jdf.queryExecution().executedPlan().toString().count("from_json(") == 1
+
+
+def test_enrich_raw_events_parses_props_once(spark):
+    from streaming_data_pipeline_spark.operators.transforms import enrich_raw_events
+
+    raw = spark.createDataFrame(
+        [(1, None, 7, "click", 2.0, '{"source": "web"}')],
+        "event_id long, ts timestamp_ntz, user_id long, event_type string, value double, props string",
+    )
+    out = enrich_raw_events(raw, as_of=AS_OF)
+    assert out._jdf.queryExecution().executedPlan().toString().count("from_json(") == 1
+    [r] = out.collect()
+    assert (r.id, r.source, r.page, r.event_hour, r.data_quality_score) == ("1", "web", None, 0, 75)
+
+
+def test_parse_edge_cases_keep_and_reject_as_before(spark):
+    df = spark.createDataFrame([Row(value=v) for v in EDGE_LINES])
+    assert _edge_rows(wire_pipeline(df, as_of=AS_OF).collect()) == EDGE_KEPT
+
+
+def test_stream_micro_batch_parses_once_and_observes_as_before(spark, tmp_path):
+    """The same edge lines through the drop-dir source: one from_json in
+    the micro-batch plan, the same kept rows, and the pre-filter observe
+    metrics recorded before the parse change."""
+    from streaming_data_pipeline_spark.streaming.sources import text_message_stream
+
+    (tmp_path / "in").mkdir()
+    (tmp_path / "in" / "batch0.jsonl").write_text("\n".join(EDGE_LINES) + "\n")
+    stream = wire_pipeline(
+        text_message_stream(spark, str(tmp_path / "in")), as_of=AS_OF, observe_quality="quality"
+    )
+    q = (
+        stream.writeStream.format("parquet")
+        .option("path", str(tmp_path / "out"))
+        .option("checkpointLocation", str(tmp_path / "ck"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    [progress] = [p for p in q.recentProgress if p["numInputRows"]]
+    assert progress["numInputRows"] == len(EDGE_LINES)
+    assert progress["observedMetrics"]["quality"].asDict() == EDGE_OBSERVED
+    assert q._jsq.explainInternal(False).count("from_json(") == 1
+    assert _edge_rows(spark.read.parquet(str(tmp_path / "out")).collect()) == EDGE_KEPT
