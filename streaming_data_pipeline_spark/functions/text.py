@@ -7,8 +7,8 @@ results are bit-identical cross-engine:
 
 - tokenization: split on single space (fixture docs are single-spaced
   ASCII; both engines agree on the degenerate cases);
-- token/shingle hashing: ``md5(prefix || token)`` hex strings; MIN over
-  a set of uniform hex strings (lexicographic) is a valid minhash;
+- MinHash: one md5 per token, then the universal slot hashes of
+  ``minhash_slot_sql`` — one SQL text evaluated by both engines;
 - fingerprints: md5 over canonicalized text / sorted distinct tokens.
 """
 
@@ -114,27 +114,6 @@ def punct_ratio(text: Column) -> Column:
     )
 
 
-def stopword_ratio(text: Column) -> Column:
-    toks = tokens(text)
-    stops = F.size(
-        F.filter(toks, lambda t: t.isin(*[F.lit(s) for s in STOPWORDS]))
-    )
-    n = F.size(toks)
-    return F.when(n > 0, F.round(stops.cast("double") / n.cast("double"), 6)).otherwise(
-        F.lit(0.0)
-    )
-
-
-def quality_score(text: Column) -> Column:
-    """Document-quality heuristic in [0,1]: length in a sane band,
-    modest punctuation, some stopwords (natural-language-ness)."""
-    n = F.length(text)
-    len_ok = F.when((n >= 20) & (n <= 10000), F.lit(0.4)).otherwise(F.lit(0.0))
-    punct_ok = F.when(punct_ratio(text) <= 0.2, F.lit(0.3)).otherwise(F.lit(0.0))
-    stop_ok = F.when(stopword_ratio(text) > 0.0, F.lit(0.3)).otherwise(F.lit(0.0))
-    return F.round(len_ok + punct_ok + stop_ok, 1)
-
-
 def _in_set(values: list[str]):
     """Single-arg lambda factory. NOTE: PySpark HOF lambdas must take
     exactly the callback's arity — extra Python default args (j=j) are
@@ -178,16 +157,21 @@ def token_set_fingerprint(text: Column) -> Column:
     return F.md5(F.concat_ws(" ", F.array_sort(distinct_tokens(text))))
 
 
-# --- multiply-shift MinHash family -----------------------------------
-# h_j(x) = (A[j] * x + B[j]) div 2^31  over  x = value of the first 7
-# hex chars of md5(token) (28 bits). One md5 per token total; the k
-# per-permutation hashes are integer multiply-shift (Dietzfelbinger
-# universal hashing — high product bits, well mixed). A[j] odd 29-bit,
-# B[j] 28-bit, so a*x+b < 2^57: no 64-bit overflow in either engine
-# (Spark ANSI mode would throw; DuckDB would wrap). Constants are
-# md5-derived at import — deterministic, and embedded literally in the
-# DuckDB oracle SQL so both engines compute identical signatures.
+# --- MinHash family --------------------------------------------------
+# h_j(x) = (A[j] * x + B[j]) mod p, p = 2^31 - 1 (Mersenne prime), over
+# x = value of the first 7 hex chars of md5(token) (28 bits): the
+# Carter-Wegman universal family, so the k slots are k independent
+# permutation proxies of the token set. One md5 per token total; the k
+# per-slot hashes are integer arithmetic. A[j] odd 29-bit, B[j] 28-bit,
+# so a*x+b < 2^58: no 64-bit overflow in either engine (Spark ANSI mode
+# would throw; DuckDB would wrap), and `%` of non-negative operands
+# means the same in both, so ONE SQL text (minhash_slot_sql) serves the
+# engine and the DuckDB oracle. The modulus is what makes the slots
+# differ: a bare `(A*x + B) div 2^31` is monotone in x, so every slot
+# picks the same minimum token and the signature degrades to a single
+# MinHash. Constants are md5-derived at import — deterministic.
 MINHASH_K = 32
+MINHASH_P = 2147483647
 MINHASH_A = [
     int(hashlib.md5(f"a{j}".encode()).hexdigest()[:7], 16) * 2 + 1
     for j in range(MINHASH_K)
@@ -198,29 +182,11 @@ MINHASH_B = [
 ]
 
 
-def minhash_signature_from_tokens(toks: Column, k: int = 16) -> Column:
-    """k-element MinHash signature over an (already-distinct) token array.
-
-    Hash family: md5('<j>:' || token) for j in 0..k-1 — uniform hex
-    strings whose lexicographic MIN is a valid minhash permutation proxy.
-    Portable: DuckDB computes the identical signature (md5 is md5).
-    Order-insensitive: MIN over the set ignores array order.
-    """
-
-    def hash_with_prefix(prefix: str):
-        return lambda t: F.md5(F.concat(F.lit(prefix), t))
-
-    return F.array(
-        *[
-            F.array_min(F.transform(toks, hash_with_prefix(f"{j}:")))
-            for j in range(k)
-        ]
-    )
-
-
-def minhash_signature(text: Column, k: int = 16) -> Column:
-    """k-element MinHash signature over the text's distinct-token set."""
-    return minhash_signature_from_tokens(distinct_tokens(text), k)
+def minhash_slot_sql(j: int, x: str) -> str:
+    """SQL text of MinHash slot j's hash of the BIGINT expression ``x``
+    (the 28-bit token value) — the single definition of the family,
+    accepted verbatim by Spark (``F.expr``) and DuckDB."""
+    return f"(({MINHASH_A[j]} * {x} + {MINHASH_B[j]}) % {MINHASH_P})"
 
 
 def lsh_band_buckets(sig: Column, bands: int = 8, rows: int = 2) -> Column:

@@ -1951,11 +1951,10 @@ def dedup_minhash_estimate_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     the diagnostic linear-ish at any corpus size.
     Reference anchor: SURVEY §2.12 dedup."""
     from streaming_data_pipeline_spark.functions.text import (
-        MINHASH_A,
-        MINHASH_B,
         distinct_tokens,
         lsh_band_buckets,
     )
+    from streaming_data_pipeline_spark.operators.dedup import _minhash_signatures
 
     from streaming_data_pipeline_spark.plans.base import (
         plan_cached,
@@ -1986,23 +1985,7 @@ def dedup_minhash_estimate_error(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.any_value("toks").alias("toks"), F.count("*").alias("cnt")
         )
     )
-    tok = groups.select("fp", F.explode("toks").alias("t")).withColumn(
-        "x", F.conv(F.substring(F.md5("t"), 1, 7), 16, 10).cast("long")
-    )
-    sig = plan_cached(
-        tok.groupBy("fp").agg(
-            *[
-                F.min(
-                    F.expr(
-                        f"({MINHASH_A[j]}L * x + {MINHASH_B[j]}L) div 2147483648L"
-                    )
-                )
-                .cast("string")
-                .alias(f"h{j}")
-                for j in range(k)
-            ]
-        )
-    )
+    sig = plan_cached(_minhash_signatures(groups, k))
     bucketed = sig.select(
         "fp",
         F.explode(

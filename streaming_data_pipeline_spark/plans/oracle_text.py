@@ -9,7 +9,7 @@ queries would each stay green against their own (now different) oracles
 while no longer computing the same thing.
 
 Spark-side twins of these fragments live in ``functions/text.py``
-(tokenizer, minhash constants) and ``functions/quality_rules.py``
+(tokenizer, the MinHash slot hash) and ``functions/quality_rules.py``
 (Gopher rule predicates); each fragment's docstring names its twin so a
 change to either side lands in exactly two places, both single-copy.
 """
@@ -24,15 +24,14 @@ DUCK_TOKS = "list_filter(string_split(COALESCE(text, ''), ' '), x -> x <> '')"
 
 
 def sql_minhash_sig(k: int = 16) -> str:
-    """Multiply-shift MinHash signature, mirroring
-    operators/dedup.minhash_lsh_pairs: x = first-7-hex-chars of
-    md5(token) as BIGINT; h_j = (A[j]*x + B[j]) // 2^31."""
-    from streaming_data_pipeline_spark.functions.text import MINHASH_A, MINHASH_B
+    """MinHash signature, mirroring operators/dedup._minhash_signatures:
+    x = first-7-hex-chars of md5(token) as BIGINT; slot j is the SQL
+    text of functions.text.minhash_slot_sql — the engine's own hash."""
+    from streaming_data_pipeline_spark.functions.text import minhash_slot_sql
 
     x = "CAST('0x' || substring(md5(t), 1, 7) AS BIGINT)"
     elems = ", ".join(
-        f"list_min(list_transform(ts, t -> "
-        f"({MINHASH_A[j]} * {x} + {MINHASH_B[j]}) // 2147483648))"
+        f"list_min(list_transform(ts, t -> {minhash_slot_sql(j, x)}))"
         for j in range(k)
     )
     return f"[{elems}]"

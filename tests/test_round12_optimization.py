@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import hashlib
 import os
+import re
 import sys
 
 import pytest
@@ -66,27 +67,32 @@ def test_simhash_lane_guard_raises_loudly_past_65535(spark):
         simhash_packed(docs, bits=64).collect()
 
 
-def test_simhash_band_join_carries_exact_hamming_predicate():
-    """r12: the exact-Hamming verify is folded into the band-join
-    condition so 98%-false candidates die before the distinct's
-    exchange (SCALING_AUDIT r11: 6.73M false of 6.88M at 10x). Pin the
-    predicate's presence in the optimized plan — the join condition
-    must reference bit_count over the xor of both sides' signatures."""
-    import re
+def _join_conditions(df) -> list[str]:
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    return [ln for ln in plan.splitlines() if re.match(r"^[\s:+\-]*Join ", ln)]
 
-    src = open(
-        os.path.join(
-            os.path.dirname(__file__),
-            "..",
-            "streaming_data_pipeline_spark",
-            "operators",
-            "dedup.py",
-        )
-    ).read()
-    # simhash: ham_join built from a./b. packed words, used in the join
-    m = re.search(
-        r"ham_join = sum\(\s*F\.bit_count\(F\.col\(\"a\.simhash\"\)\[w\]"
-        r"\.bitwiseXOR\(F\.col\(\"b\.simhash\"\)\[w\]\)\)", src
+
+def test_band_joins_carry_exact_hamming_predicate(spark):
+    """The exact-Hamming verify sits in the band join's condition, so
+    false candidates die before the distinct's exchange (SCALING_AUDIT
+    r11: 6.73M false of 6.88M at 10x). In the optimized plan of both
+    SimHash and pHash, a join condition must hold bit_count over the
+    xor of the two sides' signature words."""
+    from streaming_data_pipeline_spark.operators.dedup import (
+        phash_near_dup_pairs,
+        simhash_near_dup_pairs,
     )
-    assert m, "simhash band join lost its exact-Hamming predicate"
-    assert "& (ham_join <= F.lit(max_hamming))" in src
+
+    docs = spark.createDataFrame(
+        [(1, "a b c d"), (2, "a b c e")], "doc_id long, text string"
+    )
+    sig = spark.createDataFrame(
+        [(1, 0xAAAA, 0x5555), (2, 0xAAAB, 0x5555)],
+        "doc_id long, h_lo long, h_hi long",
+    )
+    xor = re.compile(r"bit_count\(\((\w+#\d+)\[\d+\] \^ (\w+#\d+)\[\d+\]\)\)")
+    for frame in (simhash_near_dup_pairs(docs), phash_near_dup_pairs(sig)):
+        sides = [
+            m.groups() for cond in _join_conditions(frame) for m in xor.finditer(cond)
+        ]
+        assert any(a != b for a, b in sides), _join_conditions(frame)

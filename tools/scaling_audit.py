@@ -107,7 +107,13 @@ def _simhash_analyzer(bits: int, max_hamming: int = 3):
     (the growth EXPONENT alone is uninformative here: within-copy
     false-candidate counts are heavy-tailed across isomorphic copies,
     measured 16k-201k, so a two-point exponent mostly samples that
-    dispersion)."""
+    dispersion).
+
+    Since r12 the Hamming families (SimHash and pHash) are observed
+    AFTER the in-join Hamming predicate of
+    operators/dedup._banded_hamming_pairs, so the observed frame holds
+    true pairs only and ``false_candidate_pairs`` reads 0 by
+    construction; it no longer measures the banding's selectivity."""
 
     def analyze(spark, sf_dir, cand_frames) -> dict:
         from pyspark.sql import functions as F
