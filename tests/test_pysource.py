@@ -421,3 +421,53 @@ def test_stream_double_restart_end_to_end_exactly_once(spark, tmp_path):
     got = spark.read.parquet(out)
     assert got.count() == 600
     assert got.select("event_id").distinct().count() == 600
+
+
+def test_event_ts_is_one_instant_on_every_read_path(spark):
+    """event_ts is generated as a naive timestamp: an Arrow
+    ``pa.timestamp("us")`` column on the batch path, a naive datetime on
+    the row-tuple stream path. Under non-UTC session time zones all
+    three read paths (batch with pushdown off and on, stream) must read
+    row 0 as the same instant, 2026-01-01 00:00:00 UTC."""
+    pysource.register(spark)
+    tz_key = "spark.sql.session.timeZone"
+    pd_key = "spark.sql.python.filterPushdown.enabled"
+    prev_tz, prev_pd = spark.conf.get(tz_key), spark.conf.get(pd_key)
+
+    def row0(df):
+        return (
+            df.filter(F.col("event_id") < 1)
+            .select(F.unix_timestamp("event_ts").alias("t"))
+            .collect()[0]
+            .t
+        )
+
+    try:
+        for tz in ("America/Los_Angeles", "Asia/Kolkata"):
+            spark.conf.set(tz_key, tz)
+            got = {}
+            for pushdown in ("false", "true"):
+                spark.conf.set(pd_key, pushdown)
+                got[f"batch_pushdown_{pushdown}"] = row0(
+                    spark.read.format("event_synth").option("num_rows", 10).load()
+                )
+            table = "pysource_ts_" + tz.replace("/", "_").lower()
+            q = (
+                spark.readStream.format("event_synth")
+                .option("num_rows", 10)
+                .option("rows_per_batch", 10)
+                .load()
+                .writeStream.format("memory")
+                .queryName(table)
+                .start()
+            )
+            try:
+                q.processAllAvailable()
+            finally:
+                q.stop()
+            got["stream"] = row0(spark.table(table))
+            spark.sql(f"DROP VIEW IF EXISTS {table}")
+            assert set(got.values()) == {1767225600}, (tz, got)
+    finally:
+        spark.conf.set(tz_key, prev_tz)
+        spark.conf.set(pd_key, prev_pd)

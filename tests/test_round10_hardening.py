@@ -4,7 +4,6 @@ state-retention semantics (ADVICE r9)."""
 
 from __future__ import annotations
 
-import json
 import os
 
 import pytest
@@ -298,78 +297,6 @@ def test_tws_native_runtime_matches_emulated(spark):
     assert nat == emu
 
 
-def _correctness_files() -> list[str]:
-    import glob
-
-    repo = os.path.join(os.path.dirname(__file__), "..")
-    return sorted(
-        glob.glob(os.path.join(repo, "CORRECTNESS_r*.json")),
-        key=lambda p: int(p.rsplit("_r", 1)[1].split(".")[0]),
-    )
-
-
-def test_sweep_head_not_already_stamped():
-    """Rotation recurrence tripwire (r9 verdict task 2): the first 50
-    _SWEEP_PRIORITY names — the driver's per-round evidence budget —
-    must not appear in EITHER of the two most recent committed
-    CORRECTNESS_r*.json files. Round 9 wasted its entire budget
-    re-stamping round 8's window verbatim because the rotated queue sat
-    below the spent head; this test goes red the moment a new
-    CORRECTNESS file lands, forcing the next round to rotate the head
-    BEFORE doing anything else (the fix is mechanical: promote
-    tools/evidence_age.py's queue head, demote the stamped names)."""
-    import json
-
-    import __spark_entry__ as entry
-
-    head = list(entry.queries())[:50]
-    recent = _correctness_files()[-2:]
-    for path in recent:
-        stamped = set(json.load(open(path)))
-        overlap = sorted(set(head) & stamped)
-        assert not overlap, (
-            f"driver sweep head overlaps {os.path.basename(path)} — the "
-            f"50-query budget would re-stamp {len(overlap)} fresh rows "
-            f"(e.g. {overlap[:5]}): rotate _SWEEP_PRIORITY "
-            "(tools/evidence_age.py queue head first, stamped names to "
-            "the tail) before this round's snapshot"
-        )
-
-
-def test_r13_window_is_the_stalest_50_as_of_r12():
-    """Content + position lock for THIS round's window: the head 50
-    must be exactly the 50 stalest driver rows by (evidence_round,
-    name) over the committed CORRECTNESS_r01..r12 evidence — pinned to
-    rounds <= 12 so the assertion stays stable after
-    CORRECTNESS_r13.json lands (the dynamic freshness check is
-    test_sweep_head_not_already_stamped above). Also asserts the
-    rotation's outcome: zero r7 rows survive outside the window (the
-    r12 rotation retired r5/r6 and most of r7; this one retires the
-    rest of r7)."""
-    import json
-
-    import __spark_entry__ as entry
-
-    ev: dict[str, int] = {}
-    for path in _correctness_files():
-        rnd = int(path.rsplit("_r", 1)[1].split(".")[0])
-        if rnd > 12:
-            continue
-        for name, row in json.load(open(path)).items():
-            ok = bool(row.get("hash_match") or row.get("rows_match")) and not row.get("err")
-            if ok and rnd >= ev.get(name, -1):
-                ev[name] = rnd
-    names = list(entry.queries())
-    assert set(names) <= set(ev), sorted(set(names) - set(ev))[:5]
-    expected = sorted(names, key=lambda q: (ev[q], q))[:50]
-    head = names[:50]
-    assert head == expected, (head[:5], expected[:5])
-    # every r7 row is now retired; the tail floor is r9
-    assert all(ev[q] >= 9 for q in names[50:]), [
-        q for q in names[50:] if ev[q] < 9
-    ][:5]
-
-
 def test_cc_propagation_rounds_parameter_escalates_depth():
     """ADVICE r9: _cc_propagation_sql's doubling-round count is now a
     parameter. Prove the escalation contract on a path graph of
@@ -453,33 +380,6 @@ def test_connected_components_max_iter_exhaustion_is_loud(spark):
     }
     assert got == want
     assert got == {(i, 1) for i in range(1, n + 1)}
-
-
-def test_bench_probe_gating_and_interleaved_passes():
-    """Source-level guard for the r9-verdict task-4 bench protocol —
-    the probe-gated start, the interleaved steady passes, and the
-    per-query >1.5x regression annotation must stay in the artifact
-    pipeline (same guard style as test_bench_host_noisy_self_labeling,
-    which protects the r8 noise self-labeling)."""
-    src = open(
-        os.path.join(os.path.dirname(__file__), "..", "bench.py")
-    ).read()
-    assert '"probe_samples": probe_samples' in src
-    assert "waiting 45s for a quieter window" in src
-    assert "for _pass in range(2):" in src, "interleaved steady passes dropped"
-    # r10 verdict task 6: exactly one comparison family (vs-r10) — the
-    # r6 flag dict is retired, the r10 one must stay
-    assert '"per_query_over_1p5x_vs_r6"' not in src
-    assert '"per_query_over_1p5x_vs_r10"' in src
-    assert "bench_ref_r10.json" in src
-    # and the committed r10 reference must cover every headline query
-    import bench
-
-    ref = json.load(
-        open(os.path.join(os.path.dirname(__file__), "..", "tools", "bench_ref_r10.json"))
-    )["queries"]
-    missing = [n for n in bench.HEADLINE if n not in ref]
-    assert not missing, f"r10 reference missing headline queries: {missing[:5]}"
 
 
 @pytest.mark.parametrize(

@@ -1,9 +1,6 @@
-"""Round-11 hardening (r10 verdict tasks 2-5, 7 + ADVICE r10): the
-bench artifact's truncation-proof summary line, the clamped/
-probe-matched per-query regression flags, the retired r6 comparison
-family, the CC scale path driven through the PRODUCTION query entry,
-the wire-sink two-writer concurrency contract, and the kafka option
-ownership error."""
+"""Round-11 hardening: the CC scale path driven through the PRODUCTION
+query entry, the wire-sink two-writer concurrency contract, and the
+kafka option ownership error."""
 
 from __future__ import annotations
 
@@ -16,210 +13,6 @@ import pytest
 from tests.conftest import SF_DIR_MID
 
 REPO = os.path.join(os.path.dirname(__file__), "..")
-
-
-# ---------------------------------------------------------------------------
-# bench.py: flag normalization (r10 verdict tasks 3 + 4)
-# ---------------------------------------------------------------------------
-
-
-def test_flags_quiet_host_steal_is_clamped():
-    """r10 verdict task 3: a host QUIETER than the frozen probe
-    reference (steal < 1) must not inflate ratios — the driver's r10
-    run had scalar steal 0.82, which multiplied every ratio by 1.22 and
-    manufactured 55 flags where a quiet-probe run on identical code
-    produced 10. With steal < 1 only RAW-ratio offenders may flag."""
-    import bench
-
-    timings = {"a": 1.3, "b": 2.0, "c": 1.49}
-    ref = {"a": 1.0, "b": 1.0, "c": 1.0}
-    flags = bench.per_query_flags(
-        timings, ref, scalar_steal=0.82, shuffle_steal=0.9, shuffle_heavy=set()
-    )
-    # unclamped, 1.3/0.82 = 1.59 would flag "a"; clamped it must not
-    assert set(flags) == {"b"}, flags
-    assert flags["b"]["raw"] == 2.0
-    assert flags["b"]["norm"] == 2.0  # divisor clamped to 1.0
-    assert flags["b"]["probe"] == "scalar"
-
-
-def test_flags_shuffle_heavy_normalized_by_shuffle_probe():
-    """r10 verdict task 4: shuffle-heavy queries swing 2-3x with
-    steal_factor_shuffle while the scalar probe reads 1.0 (the exact
-    r10-driver scenario). A shuffle-heavy query at raw 1.8 under
-    shuffle steal 1.7 is host noise (norm ~1.06, no flag); a genuine
-    plan regression (raw 4.0) still flags; and a scalar-class query at
-    the same raw 1.8 still flags because its probe read quiet."""
-    import bench
-
-    timings = {"noisy_shuffle": 1.8, "regressed_shuffle": 4.0, "scalar_q": 1.8}
-    ref = {k: 1.0 for k in timings}
-    flags = bench.per_query_flags(
-        timings,
-        ref,
-        scalar_steal=1.0,
-        shuffle_steal=1.7,
-        shuffle_heavy={"noisy_shuffle", "regressed_shuffle"},
-    )
-    assert "noisy_shuffle" not in flags, flags
-    assert flags["regressed_shuffle"]["probe"] == "shuffle"
-    assert flags["regressed_shuffle"]["norm"] == pytest.approx(4.0 / 1.7, abs=0.01)
-    assert flags["scalar_q"]["probe"] == "scalar"
-    assert flags["scalar_q"]["norm"] == 1.8
-
-
-def test_shuffle_heavy_class_covers_the_adjudicated_near_dups():
-    """The contention class must cover the two queries the r10 verdict
-    adjudicated as shuffle-side noise (dedup_near_minhash_lsh sits at
-    exchange-bytes rank 22/122 — outside the literal decile, which is
-    why the class is the top QUINTILE), stay a minority class (<= 25%
-    of the headline set), and track EXCHANGE_AUDIT.json dynamically."""
-    import bench
-
-    heavy = bench.shuffle_heavy_queries()
-    assert {"dedup_near_minhash_lsh", "dedup_cluster_components"} <= heavy
-    assert len(heavy) <= len(bench.HEADLINE) * 0.25, len(heavy)
-    # dynamic: restricting the candidate headline restricts the class
-    sub = bench.shuffle_heavy_queries(["dedup_exact_text", "event_type_rollup"])
-    assert "dedup_cluster_components" not in sub
-
-
-# ---------------------------------------------------------------------------
-# bench.py: truncation-proof artifact (r10 verdict task 2 + ADVICE r10)
-# ---------------------------------------------------------------------------
-
-
-def _bench_src() -> str:
-    return open(os.path.join(REPO, "bench.py")).read()
-
-
-def test_summary_line_is_compact_and_complete():
-    """The summary record must carry every field the r10 verdict listed
-    as truncation-lost (headline_total via metric/value, normalized
-    total, host_noisy, steal factors, vs-r10 ratios, flag count) and
-    encode well under the driver's 2000-char stdout tail.
-
-    r12 (r11 verdict task 1): it must ALSO carry a compact slowest-first
-    per-query map — the driver's PERF comparator and core-scaling audit
-    parse only the final line, so without it per_query/n_common came
-    back empty two rounds running — with explicit truncation accounting
-    (`queries_omitted`) and the hard size cap still holding."""
-    import bench
-
-    full = {
-        "metric": "headline_total",
-        "value": 187.234,
-        "unit": "sec",
-        "queries": {f"q{i}": float(i) / 10 for i in range(122)},
-        "cold_queries": {f"q{i}": 2.345 for i in range(122)},
-        "per_query_over_1p5x_vs_r10": {},
-        "probe_samples": [{"scalar": 0.66, "shuffle": 0.7}],
-        "cold_total": 260.123,
-        "headline_total_normalized": 151.001,
-        "calibration_sec": 0.8251,
-        "calibration_shuffle_sec": 1.2102,
-        "steal_factor": 1.2375,
-        "steal_factor_shuffle": 1.7154,
-        "host_noisy": True,
-        "median_ratio_vs_r10": 1.1902,
-        "median_ratio_vs_r10_raw": 1.3456,
-        "median_ratio_vs_r10_n": 122,
-        "headline_vs_r10_ref": 1.2534,
-        "headline_vs_r10_ref_raw": 1.5512,
-        "flagged_over_1p5x_vs_r10_count": 55,
-        "shuffle_heavy_n": 24,
-        "sf": 0.1,
-    }
-    line = bench.summary_line(full)
-    encoded = json.dumps(line)
-    assert len(encoded) <= bench._SUMMARY_MAX_CHARS <= 1900
-    for key in (
-        "metric",
-        "value",
-        "headline_total_normalized",
-        "host_noisy",
-        "steal_factor",
-        "steal_factor_shuffle",
-        "median_ratio_vs_r10",
-        "headline_vs_r10_ref",
-        "flagged_over_1p5x_vs_r10_count",
-    ):
-        assert key in line, key
-    # per-query map: slowest-first prefix, explicit truncation count,
-    # values at 2-decimal precision of the full dict's entries
-    assert line["queries"], "summary line lost its per-query map"
-    assert len(line["queries"]) + line["queries_omitted"] == 122
-    slowest = sorted(full["queries"].items(), key=lambda kv: -kv[1])
-    expected_prefix = [k for k, _ in slowest[: len(line["queries"])]]
-    assert list(line["queries"]) == expected_prefix
-    assert all(
-        line["queries"][k] == round(full["queries"][k], 2)
-        for k in line["queries"]
-    )
-    # enough coverage for the driver's comparator to pair rounds
-    assert len(line["queries"]) >= 40, len(line["queries"])
-    # the cold bulk dict must never leak into the summary
-    assert "cold_queries" not in line
-    # the driver-contract keys a last-line-only parser needs
-    assert line["metric"] == "headline_total" and line["unit"] == "sec"
-
-
-def test_bench_prints_summary_line_last_and_bulk_first():
-    """Source-level guard (same style as the probe-gating guard): the
-    full artifact dict must order its bulk members (queries/
-    cold_queries) BEFORE the summary fields so the driver's 2000-char
-    tail truncates data, not conclusions — and the compact summary line
-    must be the final stdout print before spark.stop()."""
-    src = _bench_src()
-    full_lit = src[src.index("full = {") :]
-    for bulk, summary in (
-        ('"queries": timings', '"host_noisy": host_noisy'),
-        ('"cold_queries": cold', '"headline_vs_r10_ref"'),
-        ('"probe_samples": probe_samples', '"median_ratio_vs_r10"'),
-    ):
-        assert full_lit.index(bulk) < full_lit.index(summary), (bulk, summary)
-    tail = src[src.index("print(json.dumps(full))") :]
-    assert "print(json.dumps(summary_line(full)))" in tail
-    assert tail.index("summary_line(full)") < tail.index("spark.stop()")
-
-
-def test_normalized_total_uses_clamped_probe_matched_divisors():
-    """headline_vs_r10_ref's numerator must share the flags' basis: on
-    a quiet host (both steals < 1) the normalized total equals the raw
-    total, and under shuffle contention only shuffle-heavy queries are
-    deflated, by the shuffle probe."""
-    import bench
-
-    timings = {"s": 10.0, "q": 6.0}
-    assert bench.normalized_total(timings, 0.72, 0.9, {"s"}) == 16.0
-    assert bench.normalized_total(timings, 1.0, 2.0, {"s"}) == pytest.approx(
-        10.0 / 2.0 + 6.0
-    )
-    assert '"headline_vs_r10_ref": (\n            round(total_norm_vs_r10' in (
-        _bench_src()
-    )
-
-
-def test_vs_r10_fields_have_consistent_bases():
-    """ADVICE r10: every vs-r10 field is either raw (suffixed _raw) or
-    probe-normalized (unsuffixed) — no mixed-base pairs a reader can
-    cross-compare by accident — and the r6 family is fully retired
-    (r10 verdict task 6: one reference, one ratio family)."""
-    src = _bench_src()
-    for pair in (
-        ('"median_ratio_vs_r10"', '"median_ratio_vs_r10_raw"'),
-        ('"headline_vs_r10_ref"', '"headline_vs_r10_ref_raw"'),
-    ):
-        assert pair[0] in src and pair[1] in src, pair
-    for retired in (
-        "_HEADLINE_TOTAL_R6_REF",
-        '"headline_vs_r6_ref"',
-        '"median_ratio_vs_r6"',
-        '"per_query_over_1p5x_vs_r6"',
-        "_r6_reference_timings",
-    ):
-        assert retired not in src, retired
-    assert not os.path.exists(os.path.join(REPO, "tools", "bench_ref_r6.json"))
 
 
 # ---------------------------------------------------------------------------

@@ -330,47 +330,6 @@ def test_reader_mid_read_survives_vacuum_of_superseded_file(tmp_path):
     assert os.path.exists(os.path.join(path, "part-epoch0-v2.jsonl"))
 
 
-# ---------------------------------------------- evidence-age tool --
-
-
-def test_evidence_fingerprint_closure_and_sensitivity():
-    """The fingerprint must cover the query function, its oracle SQL,
-    and the engine code it references transitively — and nothing about
-    it may depend on process state (hash order)."""
-    import sys as _sys
-
-    _sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
-    import evidence_age as ea
-    import __spark_entry__ as entry
-
-    qs, osql = entry.queries(), entry.oracle_sql()
-
-    # oracle text participates
-    fn = qs["gopher_rules_filter"]
-    assert ea.query_fingerprint("x", fn, "SELECT 1") != ea.query_fingerprint(
-        "x", fn, "SELECT 2"
-    )
-
-    # transitive closure reaches the engine implementation
-    def parts_of(name):
-        parts, seen = [name], set()
-        ea._collect(qs[name], parts, seen)
-        return "\n".join(parts)
-
-    minhash_parts = parts_of("dedup_near_minhash_lsh")
-    assert "def minhash_lsh_pairs" in minhash_parts
-    gopher_parts = parts_of("gopher_rules_filter")
-    assert "def gopher_flag_cols" in gopher_parts
-    lin_parts = parts_of("linear_model_quality_gate")
-    # data globals captured via their SOURCE assignment text
-    assert "_LINGATE_W:=" in lin_parts
-
-    # deterministic in-process
-    fps1 = {n: ea.query_fingerprint(n, qs[n], osql.get(n)) for n in list(qs)[:10]}
-    fps2 = {n: ea.query_fingerprint(n, qs[n], osql.get(n)) for n in list(qs)[:10]}
-    assert fps1 == fps2
-
-
 # ------------------------------------- clustered-fixture recall --
 
 
@@ -434,51 +393,6 @@ def test_ann_tiers_at_clustered_operating_point(spark):
     )
     emb.unpersist()
     truth.unpersist()
-
-
-def test_r13_queue_is_the_evidence_tool_output():
-    """The hand-maintained queue comments were right eight rounds
-    running but won't survive a careless round (r6 verdict task 6):
-    the staged round-13 section of _SWEEP_PRIORITY must be EXACTLY what
-    tools/evidence_age.py emits — next-stalest first, assuming the
-    staged r12 window lands its driver rows — and the recorded
-    fingerprint baseline must still match the code (stale set empty;
-    editing query-reachable code without re-running the full sweep +
-    --record breaks this test, which is the point — it caught exactly
-    that drift in round 7). Window position/content and the
-    re-stamp recurrence are locked separately in
-    tests/test_round10_hardening.py."""
-    import re
-    import sys as _sys
-
-    _sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
-    import evidence_age as ea
-
-    if not os.path.exists(ea.FP_PATH):
-        pytest.skip("fingerprint baseline not recorded yet (pre-sweep tree)")
-
-    report = ea.compute(assume_round=12)
-    assert report["never_checked"] == []
-    stale = [r["query"] for r in report["stale"]]
-    assert stale == [], f"code drifted since the recorded full sweep: {stale}"
-
-    entry_src = open(
-        os.path.join(os.path.dirname(__file__), "..", "__spark_entry__.py")
-    ).read()
-    m = re.search(
-        r"# ---- round-13 queue \(regenerated by tools/evidence_age\.py\).*?----\n"
-        r"(.*?)# ---- end round-13 queue ----",
-        entry_src,
-        re.S,
-    )
-    assert m, "round-13 queue markers missing from _SWEEP_PRIORITY"
-    staged = re.findall(r'"([a-z0-9_]+)"', m.group(1))
-
-    import __spark_entry__ as entry
-
-    window = list(entry.queries())[:50]
-    expected = [q for q in report["queue"] if q not in window][: len(staged)]
-    assert staged == expected, (staged[:5], expected[:5])
 
 
 def test_simhash128_zero_cross_copy_collisions_at_ci_scale(spark, tmp_path):

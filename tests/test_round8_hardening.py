@@ -1,185 +1,21 @@
-"""Round-8 hardening: evidence fingerprints must be process-state
-robust (r7 verdict task 4).
-
-The r7 guard test failed differently inside the full pytest run (36
-stale) vs a clean interpreter (33) on the SAME tree because
-tools/evidence_age._collect folded runtime-mutable module globals into
-query fingerprints — the dedup cache registry (a list that accumulates
-live DataFrames, whose reprs embed JVM object ids) and the audit
-observer hook. Fingerprints must hash CODE, not process state.
-"""
+"""Round-8 hardening: every package module imports without a live
+SparkSession, and the exchange-volume audit stays runnable."""
 
 from __future__ import annotations
 
 import os
 import sys
 
-import pytest
-
-sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
-
-import evidence_age as ea  # noqa: E402
-
-
-def _fp(name: str) -> str:
-    import __spark_entry__ as entry
-
-    qs, osql = entry.queries(), entry.oracle_sql()
-    return ea.query_fingerprint(name, qs[name], osql.get(name))
-
-
-def test_fingerprints_ignore_runtime_module_state():
-    """Mutating the observer hook and the live-cache registry — the two
-    globals pytest runs actually touch — must not move any fingerprint
-    that reaches operators/dedup.py."""
-    from streaming_data_pipeline_spark.operators import dedup
-
-    names = ["simhash_near_dup", "dedup_near_minhash_lsh", "image_phash_near_dup"]
-    before = {n: _fp(n) for n in names}
-
-    class _FakeCachedFrame:
-        """Stands in for a live DataFrame: repr varies per instance the
-        way DataFrame reprs embed plan/JVM identity."""
-
-        def __repr__(self):
-            return f"<FakeCachedFrame at {id(self):#x}>"
-
-        def unpersist(self):
-            return self
-
-    saved_observer = dedup.CANDIDATE_OBSERVER
-    saved_caches = list(dedup._LIVE_CACHES)
-    try:
-        dedup.CANDIDATE_OBSERVER = lambda family, cand: cand
-        dedup._LIVE_CACHES.append(_FakeCachedFrame())
-        after = {n: _fp(n) for n in names}
-    finally:
-        dedup.CANDIDATE_OBSERVER = saved_observer
-        dedup._LIVE_CACHES[:] = saved_caches
-
-    assert after == before, {
-        n: (before[n][:12], after[n][:12]) for n in names if after[n] != before[n]
-    }
-
-
-def test_closure_covers_import_bindings():
-    """Two review-confirmed blind spots: (a) function-level
-    `from pkg.x import fn` never lands in __globals__, so the engine
-    function's source was absent from the closure; (b) module-level
-    `from pkg.x import CONST` binds the value, so an edit to the
-    DEFINING module's assignment (e.g. the shared decimal-type constant
-    in plans/tpch_shared.py) left importers' fingerprints unchanged."""
-    import __spark_entry__ as entry
-
-    qs = entry.queries()
-
-    def parts_of(name):
-        parts, seen = [name], set()
-        ea._collect(qs[name], parts, seen)
-        return "\n".join(parts)
-
-    # (a) image_phash_near_dup imports its engine ops INSIDE the fn body
-    # (the r11 fusion replaced dhash_png(synth_png_payloads(..)) with the
-    # single-stage synth_dhash_png; its codec helpers must still fold)
-    phash_parts = parts_of("image_phash_near_dup")
-    assert "def phash_near_dup_pairs" in phash_parts
-    assert "def synth_dhash_png" in phash_parts
-    assert "def _dhash_of" in phash_parts
-    assert "def _encode_png" in phash_parts
-
-    # (b) cube_returnflag_status uses tpch_shared's D6 without calling
-    # any tpch_shared function — the constant's source assignment must
-    # still be folded
-    assert "D6:=" in parts_of("cube_returnflag_status")
-
-
-def test_data_globals_fold_by_source_text():
-    """Data globals enter fingerprints as their top-level assignment
-    SOURCE TEXT (mutation-proof), and derived constants recurse through
-    the names their defining expression references."""
-    from streaming_data_pipeline_spark.operators import dedup
-    from streaming_data_pipeline_spark.functions import quality_rules
-
-    assigns = ea._module_assigns(dedup.__name__)
-    # the live-cache registry folds as its literal `[]`, regardless of
-    # what accumulates in it at runtime
-    assert assigns["_LIVE_CACHES"][0] == "[]"
-    assert assigns["CANDIDATE_OBSERVER"][0] == "None"
-    # tuple-target thresholds resolve to the full right-hand side
-    qr = ea._module_assigns(quality_rules.__name__)
-    assert qr["WC_LO"][0] == "(25, 90)" and qr["WC_HI"][0] == "(25, 90)"
-
-    # a runtime-injected global gets a stable marker, not a repr
-    parts: list[str] = []
-    g = {"__name__": dedup.__name__}
-    ea._collect_data("_NOT_IN_SOURCE", g, parts, set(), 0)
-    assert parts == ["_NOT_IN_SOURCE=<no-toplevel-assign>"]
-
-
-def test_fingerprints_ignore_module_load_state():
-    """The r8 re-occurrence of the process-state bug: _collect resolved
-    function-level imports via sys.modules.get-and-skip, so a query
-    whose closure lazily imports sources/wire_sink (a SUBMODULE
-    from-import — the parent package only grows that attribute once the
-    submodule loads) fingerprinted differently after some test had
-    imported that module than in a clean --check interpreter. The tool
-    must import what it needs to resolve, deterministically.
-
-    Clean-subprocess check so the verdict cannot depend on what pytest
-    loaded before this test: fingerprint the sentinel queries with NO
-    extra imports, then again after importing every package module, and
-    require equality."""
-    import subprocess
-    import textwrap
-
-    sentinels = [
-        "wire_sink_roundtrip",
-        "small_file_compaction",
-        "retention_expire_partitions",
-        "heavy_hitter_bigrams",
-        "tpch_q1_pricing_summary",
-        "dedup_near_minhash_lsh",
-    ]
-    repo = os.path.join(os.path.dirname(__file__), "..")
-    code = textwrap.dedent(
-        f"""
-        import sys, json, pkgutil, importlib
-        sys.path.insert(0, {repo!r}); sys.path.insert(0, {os.path.join(repo, 'tools')!r})
-        import evidence_age as ea
-        import __spark_entry__ as entry
-        qs, osql = entry.queries(), entry.oracle_sql()
-        names = {sentinels!r}
-        before = {{n: ea.query_fingerprint(n, qs[n], osql.get(n)) for n in names}}
-        import streaming_data_pipeline_spark as pkg
-        for mi in pkgutil.walk_packages(pkg.__path__, pkg.__name__ + "."):
-            try:
-                importlib.import_module(mi.name)
-            except Exception:
-                pass  # udafs needs a live session; _module tolerates it too
-        after = {{n: ea.query_fingerprint(n, qs[n], osql.get(n)) for n in names}}
-        print(json.dumps({{"moved": [n for n in names if before[n] != after[n]]}}))
-        """
-    )
-    proc = subprocess.run(
-        [sys.executable, "-c", code], capture_output=True, text=True, cwd=repo
-    )
-    assert proc.returncode == 0, proc.stderr[-2000:]
-    import json
-
-    out = json.loads(proc.stdout.strip().splitlines()[-1])
-    assert out["moved"] == [], out
 
 
 def test_every_package_module_imports_sessionless():
-    """Fingerprint determinism depends on _module being able to import
-    any package module in ANY process — a module that imports only when
-    a SparkSession is alive (what functions/udafs.py was before the
-    DoubleType fix: pandas_udf(\"double\") parses DDL via the active
-    session at decoration time) folds into fingerprints in a
-    session-bearing pytest process but is silently skipped in a clean
-    --check interpreter. Enforce the invariant at the source: every
-    package module must import in a bare interpreter."""
+    """A module that imports only when a SparkSession is alive (what
+    functions/udafs.py was before the DoubleType fix: pandas_udf(\"double\")
+    parses DDL via the active session at decoration time) works inside
+    a session-bearing pytest process but fails in a bare interpreter,
+    e.g. a tool's. Enforce the invariant at the source: every package
+    module must import in a bare interpreter."""
     import subprocess
     import textwrap
 
@@ -245,24 +81,3 @@ def test_exchange_audit_smoke(tmp_path):
             "measured",
         }, (name, row)
         assert (row["bytes_sf001"] or 0) >= 0 and (row["bytes_sf01"] or 0) >= 0
-
-
-def test_check_mode_exit_codes(tmp_path):
-    """--check is the end-of-session tripwire (r7 verdict task 3): zero
-    exit on a fresh baseline, non-zero when any fingerprint drifted."""
-    import json
-    import subprocess
-
-    if not os.path.exists(ea.FP_PATH):
-        pytest.skip("fingerprint baseline not recorded yet (pre-sweep tree)")
-
-    repo = os.path.join(os.path.dirname(__file__), "..")
-    proc = subprocess.run(
-        [sys.executable, os.path.join(repo, "tools", "evidence_age.py"), "--check"],
-        capture_output=True,
-        text=True,
-        cwd=repo,
-    )
-    out = json.loads(proc.stdout.strip().splitlines()[-1])
-    assert proc.returncode == (0 if out["ok"] else 1)
-    assert out["ok"], f"baseline drifted: {out}"

@@ -1,14 +1,15 @@
-"""Local full-correctness sweep: runs EVERY queries() entry against its
+"""Full correctness sweep: runs EVERY queries() entry against its
 oracle_sql() twin with the driver's compare protocol (row count + schema
 + order-insensitive canonical value compare), at the given sf dir.
 
-The driver's per-round budget is 50 queries; this tool sweeps all of
-them so no query ships on stale evidence. Usage:
+Tier-1 checks each query against its twin at sf0.001/sf0.01; this is
+the one-command sweep of all of them at a larger scale factor (run it
+at sf0.1 whenever query or oracle code changes). Usage:
 
     python tools/full_sweep.py [sf_dir] [name ...]
 
-Prints one line per query and a final summary; exit code 1 on any
-mismatch.
+Prints one line per query and a final "N/N green" summary; exit code 1
+on any mismatch.
 """
 
 from __future__ import annotations

@@ -2,16 +2,16 @@
 
 Times each named query in isolation with the noop sink (min-of-N after a
 cold run, caches cleared between runs — the bench's methodology) and
-optionally dumps `.explain("formatted")` to plans/<tag>/<name>_<suffix>.txt
+optionally dumps `.explain("formatted")` to <plans dir>/<name>_<suffix>.txt
 so plan-shape claims are checkable without running Spark.
 
 Usage:
-    python tools/profile_queries.py [--plans plans/r11 --suffix before]
+    python tools/profile_queries.py [--plans <dir> --suffix before]
         [--reps 2] [--sf /root/testdata/sf0.1] [name ...]
 
 With no names: the full bench HEADLINE list.
-Prints one line per query: name, cold, steady(min), exchange count,
-and the r10 reference time for context.
+Prints one line per query: name, cold, steady(min), exchange count and
+Python-node count.
 """
 
 from __future__ import annotations
@@ -52,7 +52,6 @@ def main() -> None:
 
     qs = entry_mod.queries()
     names = args.names or [n for n in bench.HEADLINE if n in qs]
-    ref = bench._reference_timings("bench_ref_r10.json")
 
     # Warm up JVM/codegen/footer cache like the bench does.
     _force(qs["event_type_rollup"](spark, args.sf))
@@ -90,23 +89,21 @@ def main() -> None:
             _force(fn(spark, args.sf))
             steady = min(steady, time.perf_counter() - t0)
             spark.catalog.clearCache()
-        r = ref.get(name, 0.0)
         results[name] = {
             "cold": round(cold, 3),
             "steady": round(steady, 3),
             "exchanges": n_exchange,
             "python_nodes": n_python,
-            "ref_r10": r,
         }
         print(
             f"{name:42s} cold={cold:7.2f}  steady={steady:7.2f}  "
-            f"exch={n_exchange:2d}  py={n_python}  ref={r:5.2f}",
+            f"exch={n_exchange:2d}  py={n_python}",
             flush=True,
         )
         spark.sparkContext.setJobDescription(None)
 
     total = round(sum(v["steady"] for v in results.values()), 2)
-    print(f"TOTAL steady {total}  (ref {round(sum(v['ref_r10'] for v in results.values()), 2)})")
+    print(f"TOTAL steady {total}")
     if args.out:
         with open(args.out, "w") as f:
             json.dump(results, f, indent=1, sort_keys=True)
