@@ -16,10 +16,6 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def to_double_array(v: Column) -> Column:
-    return F.transform(v, lambda x: x.cast("double"))
-
-
 def dot(a: Column, b: Column) -> Column:
     """Left fold of pairwise products (both sides cast to double first)."""
     prods = F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double"))

@@ -36,35 +36,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def _mg_candidates(items: DataFrame, k: int) -> DataFrame:
-    """Per-partition Misra-Gries summaries -> distinct candidate items.
-    Input: single-column frame of items; output: one ``item`` column."""
-
-    def summarize(batches):
-        counters: dict = {}
-        for pdf in batches:
-            for it in pdf.iloc[:, 0].tolist():
-                if it is None:
-                    continue
-                if it in counters:
-                    counters[it] += 1
-                elif len(counters) < k:
-                    counters[it] = 1
-                else:
-                    # decrement-all step; drop zeroed counters
-                    dead = []
-                    for key in counters:
-                        counters[key] -= 1
-                        if counters[key] == 0:
-                            dead.append(key)
-                    for key in dead:
-                        del counters[key]
-        if counters:
-            yield pd.DataFrame({"item": list(counters)})
-
-    return items.mapInPandas(summarize, "item string").distinct()
-
-
 def _mg_summaries(items: DataFrame, k: int) -> DataFrame:
     """One pass emitting BOTH per-partition Misra-Gries candidates
     (``rows`` NULL) and one per-partition row-count sentinel (``item``

@@ -13,7 +13,12 @@ DataFrame->DataFrame function built from Column expressions, so:
 
 Determinism: the reference stamps ``processed_at = utcnow()``
 (Streamingdag.py:183-184). Every function takes an optional fixed ``as_of``
-wall-clock injection point; `None` means real processing time.
+wall-clock injection point; `None` means real processing time: in a stream,
+the batch timestamp of each micro-batch (one value per batch, the
+``batchTimestampMs`` of its offset log entry); in a batch query, the query's
+start. That stamp reaches the generated code as a referenced expression, not
+as a literal, so a stream compiles its classes once, not once per batch
+(see :func:`_processed_at`).
 """
 
 from __future__ import annotations
@@ -40,7 +45,17 @@ _OPTIONAL_JSON_SCHEMA = ", ".join(f"{f} STRING" for f in OPTIONAL_FIELDS)
 
 def _processed_at(as_of: str | None) -> Column:
     if as_of is None:
-        return F.current_timestamp().cast("timestamp_ntz")
+        # Each micro-batch swaps current_timestamp() for a literal of its
+        # batch time, and whole-stage codegen writes timestamp literals
+        # into the Java source: every batch would compile new classes and
+        # run its rows through cold bytecode. aggregate() is evaluated
+        # interpreted (CodegenFallback), so the stamp stays inside the
+        # expression object the generated code references, and the source
+        # is the same for every batch. The epoch is never taken; it keeps
+        # the column non-null, as current_timestamp() is, so the sink's
+        # parquet column stays required.
+        stamp = F.aggregate(F.array(F.lit(0)), F.current_timestamp(), lambda acc, _: acc)
+        return F.coalesce(stamp, F.lit(0).cast("timestamp")).cast("timestamp_ntz")
     return F.lit(as_of).cast("timestamp_ntz")
 
 

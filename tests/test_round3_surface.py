@@ -391,7 +391,7 @@ def test_misra_gries_candidates_are_superset(spark):
     from pyspark.sql import functions as F
 
     from streaming_data_pipeline_spark.operators.sketches import (
-        _mg_candidates,
+        _mg_summaries,
         heavy_hitters,
     )
 
@@ -403,7 +403,8 @@ def test_misra_gries_candidates_are_superset(spark):
     items = spark.createDataFrame(rows, "item string").repartition(8)
     phi = 0.05  # threshold 245: exactly {hot_a, hot_b, hot_c}
     k = math.ceil(1.0 / phi)
-    cands = {r.item for r in _mg_candidates(items, k).collect()}
+    summ = _mg_summaries(items, k).filter(F.col("rows").isNull())
+    cands = {r.item for r in summ.collect()}
     assert {"hot_a", "hot_b", "hot_c"} <= cands
     got = {r.item: r.n for r in heavy_hitters(items, "item", phi).collect()}
     assert got == {"hot_a": 1000, "hot_b": 600, "hot_c": 300}

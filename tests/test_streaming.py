@@ -511,3 +511,83 @@ def test_forty_file_batch_lists_without_a_spark_job(spark, tmp_path):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
+
+
+def test_repeat_drain_generates_no_new_code(spark, tmp_path):
+    """A drain stamped with real processing time reuses the classes the
+    previous drain generated. Inlined as a literal, each batch's
+    timestamp made the whole-stage source new on every batch: 2 Janino
+    compiles per drain, and its rows ran through cold bytecode."""
+    from streaming_data_pipeline_spark.streaming.pipeline import run_pipeline
+
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    (tmp_path / "in").mkdir()
+    _write_messages(tmp_path / "in", EVENTS)
+    added = []
+    for k in range(2):
+        before = compiles.getCount()
+        q = run_pipeline(
+            spark, str(tmp_path / "in"), str(tmp_path / f"out{k}"),
+            str(tmp_path / f"ckpt{k}"), available_now=True,
+        )
+        q.awaitTermination(120)
+        added.append(compiles.getCount() - before)
+        assert spark.read.parquet(str(tmp_path / f"out{k}")).count() == len(EVENTS)
+    assert added[1] == 0, added
+
+
+def test_processed_at_is_each_batch_timestamp(spark, tmp_path):
+    """Every row of a micro-batch carries that batch's timestamp (the
+    batchTimestampMs of its offset log entry, which falls inside the
+    batch's trigger), two batches get two increasing stamps, and the
+    sink's parquet schema is the one a fixed as_of writes, except that
+    processed_at is a required timestamp[us] column."""
+    import datetime as dt
+    import glob
+    import zoneinfo
+
+    import pyarrow.parquet as pq
+
+    from streaming_data_pipeline_spark.streaming.pipeline import run_pipeline
+
+    inp, out, ckpt = (str(tmp_path / n) for n in ("in", "out", "ckpt"))
+    (tmp_path / "in").mkdir()
+    tz = zoneinfo.ZoneInfo(spark.conf.get("spark.sql.session.timeZone"))
+
+    def wall(ms):
+        return dt.datetime.fromtimestamp(ms / 1000, tz).replace(tzinfo=None)
+
+    halves = [EVENTS[:15], EVENTS[15:]]
+    stamps = []
+    for k, events in enumerate(halves):
+        _write_messages(inp, events, name=f"batch{k}.jsonl")
+        q = run_pipeline(spark, inp, out, ckpt, available_now=True)
+        q.awaitTermination(120)
+        [progress] = [p for p in q.recentProgress if p["numInputRows"] > 0]
+        assert progress["batchId"] == k
+        with open(f"{ckpt}/offsets/{k}") as f:
+            batch_ms = json.loads(f.read().splitlines()[1])["batchTimestampMs"]
+        start = dt.datetime.fromisoformat(progress["timestamp"].replace("Z", "+00:00"))
+        start_ms = int(start.timestamp() * 1000)
+        assert start_ms <= batch_ms <= start_ms + progress["durationMs"]["triggerExecution"]
+        ids = [e["id"] for e in events]
+        got = (
+            spark.read.parquet(out)
+            .filter(F.col("id").isin(ids))
+            .select("processed_at").distinct().collect()
+        )
+        assert [r.processed_at for r in got] == [wall(batch_ms)]
+        stamps.append(batch_ms)
+    assert stamps[0] < stamps[1]
+
+    fixed = str(tmp_path / "fixed")
+    q = run_pipeline(spark, inp, fixed, str(tmp_path / "ckpt_fixed"), available_now=True, as_of=AS_OF)
+    q.awaitTermination(120)
+    want = pq.read_schema(glob.glob(f"{fixed}/*/*.parquet")[0])
+    # a real-time stamp is non-null, as current_timestamp() is; the cast
+    # of a fixed as_of string is nullable
+    i = want.get_field_index("processed_at")
+    want = want.set(i, want.field(i).with_nullable(False))
+    assert str(want.field(i).type) == "timestamp[us]"
+    for p in glob.glob(f"{out}/*/*.parquet"):
+        assert pq.read_schema(p).equals(want, check_metadata=False)
