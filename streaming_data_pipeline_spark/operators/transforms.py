@@ -56,7 +56,13 @@ def _processed_at(as_of: str | None) -> Column:
         # parquet column stays required.
         stamp = F.aggregate(F.array(F.lit(0)), F.current_timestamp(), lambda acc, _: acc)
         return F.coalesce(stamp, F.lit(0).cast("timestamp")).cast("timestamp_ntz")
-    return F.lit(as_of).cast("timestamp_ntz")
+    # The cast alone is nullable, so a fixed as_of would write an optional
+    # column where a real-time run writes a required one. The epoch is
+    # never taken either: a malformed as_of fails the ANSI cast, or, with
+    # ANSI casts off, the raise_error that its NULL reaches.
+    fixed = F.lit(as_of).cast("timestamp_ntz")
+    malformed = F.raise_error(F.lit(f"malformed as_of: {as_of!r}"))
+    return F.coalesce(fixed, malformed, F.lit(0).cast("timestamp").cast("timestamp_ntz"))
 
 
 def parse_wire(df: DataFrame, value_col: str = "value") -> DataFrame:

@@ -1257,7 +1257,7 @@ WHERE rank <= 10 ORDER BY probe_id, rank
 # blowup (12 rounds: 85 s; the same 6 rounds as temp tables: 0.07 s at
 # sf0.1's 1.19M group edges). 6 doubling rounds cover diameter 32 —
 # reach doubles per round starting at 1 (1,2,4,...,2^(rounds-1)),
-# measured on a path graph in tests/test_round10_hardening.py —
+# measured on a path graph in tests/test_dedup.py —
 # far past the fixture's near-clique dup components (converges at round
 # 5 with zero moves at every sf) — and the certificate round turns any
 # insufficiency into a loud sentinel, never a silent pass.
@@ -1278,7 +1278,7 @@ def _cc_propagation_sql(l0_body: str, rounds: int = _CC_ROUNDS) -> str:
 
     ``rounds`` doubling rounds certify component diameter up to
     2**(rounds - 1): the per-round reach doubles starting at 1
-    (measured on a path graph in tests/test_round10_hardening.py —
+    (measured on a path graph in tests/test_dedup.py —
     round 1 only reaches direct neighbors because label-of-label is
     still the identity). The default covers the fixtures (converge at
     5, diameter << 32). A deeper-diameter

@@ -11,9 +11,11 @@ to fixture density where the reference's 10-minute windows would select
 ~0 rows (noted inline).
 
 Scale notes: every query here is filter -> partial/final hash aggregate
--> (optional) sort, fully whole-stage-codegen'd. On a date-partitioned
-warehouse table the AS_OF predicates prune partitions; `orderBy().limit(k)`
-compiles to TakeOrderedAndProject (no global sort at 100 TB).
+-> (optional) sort, fully whole-stage-codegen'd. The AS_OF predicates
+filter on `timestamp`, so over the date-partitioned sink they prune no
+partition (the plan shows `PartitionFilters: []`; ROADMAP D9 adds the
+implied `event_date` conjunct). `orderBy().limit(k)` compiles to
+TakeOrderedAndProject (no global sort at 100 TB).
 """
 
 from __future__ import annotations

@@ -5,10 +5,12 @@ WriteToBigQuery graph (Streamingdag.py:266-330).
 Mapping (SURVEY.md §2.4 W1): the reference's windowing carries NO
 aggregation — it only batches records for the sink — so the native analog
 is micro-batch cadence (``trigger(processingTime='60 seconds')``) feeding
-an append-only parquet sink. The sink is date-partitioned so the
-freshness predicates (§2.7 P2) become partition pruning at scale, and the
-checkpoint gives exactly-once file commits — strictly stronger than the
-reference's at-least-once streaming inserts.
+an append-only parquet sink, partitioned by ``event_date``. The freshness
+predicates (§2.7 P2) filter on ``timestamp``, not on the partition column,
+so today they prune no partition: a ``timestamp >= cutoff`` filter over
+the sink plans with ``PartitionFilters: []`` (ROADMAP D9 adds the implied
+``event_date`` conjunct). The checkpoint gives exactly-once file commits —
+strictly stronger than the reference's at-least-once streaming inserts.
 """
 
 from __future__ import annotations

@@ -112,6 +112,13 @@ def session_window_stats(
     )
 
 
+# The off-heap state store provider; one conf swaps it in for any
+# stateful operator (``spark.sql.streaming.stateStore.providerClass``).
+ROCKSDB_PROVIDER = (
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+)
+
+
 def streaming_dedup(
     events: DataFrame,
     id_cols: tuple[str, ...] = ("id",),

@@ -85,7 +85,7 @@ def _canon_cell(v):
 def _canon_col(s: pd.Series) -> list:
     """Column-wise stringification: dtype-dispatched fast paths for the
     primitive kinds (equivalence with _canon_cell guarded by
-    tests/test_round9_hardening.py::test_canon_column_fast_paths_match_cell),
+    tests/test_entry.py::test_canon_column_fast_paths_match_cell),
     per-cell fallback for object/nested columns. The per-cell form cost
     ~40 s alone on the 2.58M-row pair compare in full sf0.1 sweeps."""
     import numpy as np

@@ -394,7 +394,7 @@ def test_stateful_op_on_rocksdb_state_store(spark):
     operator change."""
     import __spark_entry__ as entrymod
 
-    from streaming_data_pipeline_spark.streaming.stateful import ROCKSDB_PROVIDER
+    from streaming_data_pipeline_spark.streaming.windows import ROCKSDB_PROVIDER
 
     q = entrymod.queries()["streaming_stateful_user_totals"]
     key = "spark.sql.streaming.stateStore.providerClass"
@@ -540,8 +540,8 @@ def test_processed_at_is_each_batch_timestamp(spark, tmp_path):
     """Every row of a micro-batch carries that batch's timestamp (the
     batchTimestampMs of its offset log entry, which falls inside the
     batch's trigger), two batches get two increasing stamps, and the
-    sink's parquet schema is the one a fixed as_of writes, except that
-    processed_at is a required timestamp[us] column."""
+    sink's parquet schema is the one a fixed as_of writes: processed_at
+    is a required timestamp[us] column in both."""
     import datetime as dt
     import glob
     import zoneinfo
@@ -584,10 +584,7 @@ def test_processed_at_is_each_batch_timestamp(spark, tmp_path):
     q = run_pipeline(spark, inp, fixed, str(tmp_path / "ckpt_fixed"), available_now=True, as_of=AS_OF)
     q.awaitTermination(120)
     want = pq.read_schema(glob.glob(f"{fixed}/*/*.parquet")[0])
-    # a real-time stamp is non-null, as current_timestamp() is; the cast
-    # of a fixed as_of string is nullable
-    i = want.get_field_index("processed_at")
-    want = want.set(i, want.field(i).with_nullable(False))
-    assert str(want.field(i).type) == "timestamp[us]"
+    field = want.field("processed_at")
+    assert str(field.type) == "timestamp[us]" and not field.nullable
     for p in glob.glob(f"{out}/*/*.parquet"):
         assert pq.read_schema(p).equals(want, check_metadata=False)

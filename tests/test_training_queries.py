@@ -64,77 +64,3 @@ def test_chunk_dup_stats_bounds(spark):
     assert out.filter(F.col("dup_chunks") > F.col("n_chunks")).count() == 0
     assert out.filter(F.col("dup_chunks") > 0).count() > 0
 
-
-def test_tws_plan_builds(spark):
-    """transformWithStateInPandas plan construction needs no protobuf —
-    the wiring (grouping, output schema, Update mode) is checkable even
-    where the runtime protocol dep is absent."""
-    from streaming_data_pipeline_spark.streaming.sources import (
-        events_fixture_stream,
-    )
-    from streaming_data_pipeline_spark.streaming.stateful import (
-        user_type_stats_tws,
-    )
-
-    out = user_type_stats_tws(events_fixture_stream(spark, SF_DIR))
-    assert out.isStreaming
-    assert [f.name for f in out.schema.fields] == [
-        "user_id",
-        "n_events",
-        "n_types",
-    ]
-
-
-def test_tws_runs_and_matches_batch_truth(spark):
-    """End-to-end TWS run (RocksDB state store) vs the batch aggregate —
-    skipped where the protobuf protocol dep is unavailable."""
-    from streaming_data_pipeline_spark.streaming.stateful import (
-        ROCKSDB_PROVIDER,
-        tws_available,
-        user_type_stats_tws,
-    )
-
-    if not tws_available():
-        pytest.skip("protobuf not installed: TWS driver worker cannot start")
-
-    from streaming_data_pipeline_spark.sources.batch import load_table
-    from streaming_data_pipeline_spark.streaming.sources import (
-        events_fixture_stream,
-    )
-
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, ROCKSDB_PROVIDER)
-    try:
-        out = user_type_stats_tws(events_fixture_stream(spark, SF_DIR))
-        q = (
-            out.writeStream.format("memory")
-            .queryName("tws_user_stats")
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        got = (
-            spark.table("tws_user_stats")
-            .groupBy("user_id")
-            .agg(
-                F.max("n_events").alias("n_events"),
-                F.max("n_types").alias("n_types"),
-            )
-        )
-        want = (
-            load_table(spark, SF_DIR, "events")
-            .groupBy("user_id")
-            .agg(
-                F.count("*").alias("n_events"),
-                F.countDistinct("event_type").alias("n_types"),
-            )
-        )
-        assert got.exceptAll(want).count() == 0
-        assert want.exceptAll(got).count() == 0
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)

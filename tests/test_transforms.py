@@ -47,6 +47,17 @@ def test_happy_path_full_enrichment(spark):
     assert r.source == "airflow_dag"
     assert r.processed_at.isoformat().startswith("2024-01-31T00:00:00")
     assert r.timestamp.isoformat() == "2024-01-15T10:00:00"
+    # a malformed as_of fails the run, with ANSI casts or without; it
+    # never becomes the epoch
+    key = "spark.sql.ansi.enabled"
+    saved = spark.conf.get(key)
+    try:
+        for ansi, error in (("true", "CAST_INVALID_INPUT"), ("false", "malformed as_of")):
+            spark.conf.set(key, ansi)
+            with pytest.raises(Exception, match=error):
+                wire_pipeline(wire_df(spark, [GOOD]), as_of="not a time").collect()
+    finally:
+        spark.conf.set(key, saved)
 
 
 def test_second_canned_message_with_product(spark):
